@@ -137,13 +137,7 @@ object Bench {
       if (trials.isEmpty) None else Some(name -> median(trials))
     }
 
-    def jq(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
+    import Verify.{jsonString => jq}
     // The driver captures a bounded tail of stdout (2000 chars in r4, which
     // clipped the full-precision line, VERDICT r4 §wrong/next 7). The stdout
     // line is kept compact — ms-rounded times, trials map omitted — and the

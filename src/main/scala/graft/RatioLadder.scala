@@ -219,96 +219,71 @@ object RatioLadder {
       .select(col("__r.*"))
   }
 
-  /** DuckDB replay of [[wordcountLadderU]] — same keeps, same integer
-    * comparator arithmetic, same T4 chain, rung per UNION branch.
+  /** The ONE DuckDB rung template of [[ladderU]], with the same
+    * parameters: `items(cond)` is the family's count query over the
+    * `table` rows passing `cond` (key `keyCol`, count `cnt`); each rung
+    * keeps by `unitCol`, compares under the same integer comparator
+    * arithmetic and T4 chain, and is one UNION branch.
     */
-  def wordcountLadderUOracleSql: String = {
+  private def ladderUOracleSql(
+      table: String,
+      items: String => String,
+      keyCol: String,
+      unitCol: String,
+      nCol: String): String = {
     import graft.sampling.{Stats, UniverseSampled}
-    val wcFrom = (cond: String) =>
-      RQ.wordCountOracleSql(cond, "CAST(count(*) AS BIGINT) AS cnt")
+    val nKeptCol = s"${nCol}_kept"
     val rungs = DeclaredPcts.map { pct =>
-      val keep = UniverseSampled.keepSql("doc_id", pct)
+      val keep = UniverseSampled.keepSql(unitCol, pct)
       s"""SELECT CAST($pct AS BIGINT) AS pct, d.sum_exact, d.sum_abs_diff,
          |       (10000 * d.sum_abs_diff) // nullif(d.sum_exact, 0) AS data_error_bp,
-         |       nt.n_docs, nk.n_docs_kept,
-         |       ${Stats.errBoundSql("nt.n_docs", "nk.n_docs_kept", 0.95)} AS err_bound
+         |       nt.$nCol, nk.$nKeptCol,
+         |       ${Stats.errBoundSql(s"nt.$nCol", s"nk.$nKeptCol", 0.95)} AS err_bound
          |FROM (
          |  SELECT CAST(sum(abs(coalesce(e.cnt, 0) - coalesce(s.est, 0))) AS BIGINT) AS sum_abs_diff,
          |         CAST(sum(coalesce(e.cnt, 0)) AS BIGINT) AS sum_exact
-         |  FROM (${wcFrom("TRUE")}) e
+         |  FROM (${items("TRUE")}) e
          |  FULL OUTER JOIN (
-         |    SELECT word, cnt * ${UniverseSampled.scaleFor(pct)} AS est
-         |    FROM (${wcFrom(keep)})) s USING (word)
+         |    SELECT $keyCol, cnt * ${UniverseSampled.scaleFor(pct)} AS est
+         |    FROM (${items(keep)})) s USING ($keyCol)
          |) d,
-         |(SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents) nt,
-         |(SELECT CAST(count(*) AS BIGINT) AS n_docs_kept
-         | FROM documents WHERE $keep) nk""".stripMargin
+         |(SELECT CAST(count(*) AS BIGINT) AS $nCol FROM $table) nt,
+         |(SELECT CAST(count(*) AS BIGINT) AS $nKeptCol
+         | FROM $table WHERE $keep) nk""".stripMargin
     }
     rungs.mkString("", "\nUNION ALL\n", "\nORDER BY pct DESC")
   }
 
+  /** DuckDB replay of [[wordcountLadderU]] over the word-count oracle. */
+  def wordcountLadderUOracleSql: String =
+    ladderUOracleSql("documents",
+      cond => RQ.wordCountOracleSql(cond, "CAST(count(*) AS BIGINT) AS cnt"),
+      "word", "doc_id", "n_docs")
+
   /** DuckDB replay of [[charcountLadderU]] — the `charcount` oracle's
-    * char-explode convention under the same rung arithmetic.
+    * char-explode convention.
     */
-  def charcountLadderUOracleSql: String = {
-    import graft.sampling.{Stats, UniverseSampled}
-    val ccFrom = (cond: String) =>
-      s"""SELECT ch, CAST(count(*) AS BIGINT) AS cnt
-         |FROM (SELECT unnest(string_split(text, '')) AS ch
-         |      FROM documents WHERE ($cond))
-         |WHERE ch <> '' GROUP BY ch""".stripMargin
-    val rungs = DeclaredPcts.map { pct =>
-      val keep = UniverseSampled.keepSql("doc_id", pct)
-      s"""SELECT CAST($pct AS BIGINT) AS pct, d.sum_exact, d.sum_abs_diff,
-         |       (10000 * d.sum_abs_diff) // nullif(d.sum_exact, 0) AS data_error_bp,
-         |       nt.n_docs, nk.n_docs_kept,
-         |       ${Stats.errBoundSql("nt.n_docs", "nk.n_docs_kept", 0.95)} AS err_bound
-         |FROM (
-         |  SELECT CAST(sum(abs(coalesce(e.cnt, 0) - coalesce(s.est, 0))) AS BIGINT) AS sum_abs_diff,
-         |         CAST(sum(coalesce(e.cnt, 0)) AS BIGINT) AS sum_exact
-         |  FROM (${ccFrom("TRUE")}) e
-         |  FULL OUTER JOIN (
-         |    SELECT ch, cnt * ${UniverseSampled.scaleFor(pct)} AS est
-         |    FROM (${ccFrom(keep)})) s USING (ch)
-         |) d,
-         |(SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents) nt,
-         |(SELECT CAST(count(*) AS BIGINT) AS n_docs_kept
-         | FROM documents WHERE $keep) nk""".stripMargin
-    }
-    rungs.mkString("", "\nUNION ALL\n", "\nORDER BY pct DESC")
-  }
+  def charcountLadderUOracleSql: String =
+    ladderUOracleSql("documents",
+      cond =>
+        s"""SELECT ch, CAST(count(*) AS BIGINT) AS cnt
+           |FROM (SELECT unnest(string_split(text, '')) AS ch
+           |      FROM documents WHERE ($cond))
+           |WHERE ch <> '' GROUP BY ch""".stripMargin,
+      "ch", "doc_id", "n_docs")
 
   /** DuckDB replay of [[logHostLadderU]] — the `log_host` oracle's CLF
     * convention (events synthesize to lines, `event_id % 97 = 0` lines
-    * are malformed and drop at parse) under the same rung arithmetic;
-    * n/N count RAW events like the engine side.
+    * are malformed and drop at parse); n/N count RAW events like the
+    * engine side.
     */
-  def logHostLadderUOracleSql: String = {
-    import graft.sampling.{Stats, UniverseSampled}
-    val hostFrom = (cond: String) =>
-      s"""SELECT 'h' || CAST(user_id AS VARCHAR) || '.example.com' AS host,
-         |       CAST(count(*) AS BIGINT) AS cnt
-         |FROM events WHERE event_id % 97 <> 0 AND ($cond) GROUP BY 1""".stripMargin
-    val rungs = DeclaredPcts.map { pct =>
-      val keep = UniverseSampled.keepSql("event_id", pct)
-      s"""SELECT CAST($pct AS BIGINT) AS pct, d.sum_exact, d.sum_abs_diff,
-         |       (10000 * d.sum_abs_diff) // nullif(d.sum_exact, 0) AS data_error_bp,
-         |       nt.n_lines, nk.n_lines_kept,
-         |       ${Stats.errBoundSql("nt.n_lines", "nk.n_lines_kept", 0.95)} AS err_bound
-         |FROM (
-         |  SELECT CAST(sum(abs(coalesce(e.cnt, 0) - coalesce(s.est, 0))) AS BIGINT) AS sum_abs_diff,
-         |         CAST(sum(coalesce(e.cnt, 0)) AS BIGINT) AS sum_exact
-         |  FROM (${hostFrom("TRUE")}) e
-         |  FULL OUTER JOIN (
-         |    SELECT host, cnt * ${UniverseSampled.scaleFor(pct)} AS est
-         |    FROM (${hostFrom(keep)})) s USING (host)
-         |) d,
-         |(SELECT CAST(count(*) AS BIGINT) AS n_lines FROM events) nt,
-         |(SELECT CAST(count(*) AS BIGINT) AS n_lines_kept
-         | FROM events WHERE $keep) nk""".stripMargin
-    }
-    rungs.mkString("", "\nUNION ALL\n", "\nORDER BY pct DESC")
-  }
+  def logHostLadderUOracleSql: String =
+    ladderUOracleSql("events",
+      cond =>
+        s"""SELECT 'h' || CAST(user_id AS VARCHAR) || '.example.com' AS host,
+           |       CAST(count(*) AS BIGINT) AS cnt
+           |FROM events WHERE event_id % 97 <> 0 AND ($cond) GROUP BY 1""".stripMargin,
+      "host", "event_id", "n_lines")
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")

@@ -1225,14 +1225,23 @@ object SparkEntry {
       "\nORDER BY word"
   }
 
+  /** The ONE DuckDB spelling of [[RQ.wirelessLinks]] over the events
+    * passing `cond` (a keep-predicate or TRUE), `countSelect` the
+    * aggregate projection — the [[RQ.wordCountOracleSql]] shape.
+    */
+  private def wirelessOracleSql(
+      cond: String = "TRUE", countSelect: String = "count(*) AS cnt"): String =
+    s"""SELECT concat(greatest(user_id, k), '->', least(user_id, k)) AS link, $countSelect
+       |FROM (SELECT user_id, CAST(json_extract_string(props, '$$.k') AS BIGINT) AS k
+       |      FROM events WHERE $cond)
+       |WHERE k IS NOT NULL GROUP BY 1 ORDER BY 1""".stripMargin
+
   /** Universe-sampled wireless links (unit = event row). */
   private def wirelessSampledUSql(pct: Int): String = {
     import graft.sampling.UniverseSampled
-    s"""SELECT concat(greatest(user_id, k), '->', least(user_id, k)) AS link,
-       |       count(*) * ${UniverseSampled.scaleSql(pct)} AS est_cnt
-       |FROM (SELECT user_id, CAST(json_extract_string(props, '$$.k') AS BIGINT) AS k
-       |      FROM events WHERE ${UniverseSampled.keepSql("event_id", pct)})
-       |WHERE k IS NOT NULL GROUP BY 1 ORDER BY 1""".stripMargin
+    wirelessOracleSql(
+      UniverseSampled.keepSql("event_id", pct),
+      s"count(*) * ${UniverseSampled.scaleSql(pct)} AS est_cnt")
   }
 
   /** Universe-stratified estimate oracle (integer bp thresholds, exact HT
@@ -1291,10 +1300,7 @@ object SparkEntry {
         |  ELSE '/' || event_type || '/item' || CAST(event_id % 50 AS VARCHAR) END AS page,
         |  count(*) AS cnt
         |FROM events WHERE event_id % 97 <> 0 GROUP BY 1 ORDER BY 1""".stripMargin,
-    "wireless_links" ->
-      """SELECT concat(greatest(user_id, k), '->', least(user_id, k)) AS link, count(*) AS cnt
-        |FROM (SELECT user_id, CAST(json_extract_string(props, '$.k') AS BIGINT) AS k FROM events)
-        |WHERE k IS NOT NULL GROUP BY 1 ORDER BY 1""".stripMargin,
+    "wireless_links" -> wirelessOracleSql(),
     "graph_pagerank" -> graft.graphs.PageRank.ranksOracleSql(),
     "graph_triangles" -> graft.graphs.Triangles.statsOracleSql,
     "graph_kcore" -> graft.graphs.KCore.coreOracleSql,

@@ -44,9 +44,6 @@ import org.apache.spark.sql.functions._
   */
 object Triangles {
 
-  /** One-row census frame:
-    * (n_edges, n_wedges, n_triangles, closure_permille).
-    */
   /** The ONE spelling of the canonical undirected edge frame `(a, b)`
     * with a < b (duplicate-free via [[PageRank.edges]]' distinct;
     * self-loops dropped by the strict inequality) — shared by the exact
@@ -59,6 +56,9 @@ object Triangles {
       .filter(col("src") < col("dst"))
       .select(col("src").as("a"), col("dst").as("b"))
 
+  /** One-row census frame:
+    * (n_edges, n_wedges, n_triangles, closure_permille).
+    */
   def stats(events: DataFrame): DataFrame =
     statsFromUndirected(canonicalEdges(events))
 
@@ -154,9 +154,16 @@ object Triangles {
           .otherwise(expr("(2000 * n_tri) div (deg * (deg - 1))")))
   }
 
-  def localClusteringOracleSql: String =
-    s"""WITH ${PageRank.edgesCteSql},
-       |und AS (SELECT src AS a, dst AS b FROM edges WHERE src < dst),
+  /** The ONE DuckDB spelling of the census pipeline over the canonical
+    * edges passing `keep` (a predicate over `a`, `b`; TRUE for the exact
+    * census): [[canonicalEdges]] → [[degrees]] → [[orient]] →
+    * [[closedTriangles]] as the CTEs `und`, `deg`, `j`/`o`, `w`/`t (u, p, q)`.
+    * Every census oracle composes THIS, so an orientation or closure
+    * change reaches the exact, clustering and sampled gates at once.
+    */
+  private def censusCteSql(keep: String): String =
+    s"""${PageRank.edgesCteSql},
+       |und AS (SELECT src AS a, dst AS b FROM edges WHERE src < dst AND ($keep)),
        |deg AS (
        |  SELECT v, count(*) AS deg
        |  FROM (SELECT a AS v FROM und UNION ALL SELECT b AS v FROM und)
@@ -170,7 +177,10 @@ object Triangles {
        |  FROM j),
        |w AS (SELECT x.u AS u, x.v AS p, y.v AS q
        |      FROM o x JOIN o y ON x.u = y.u AND x.v < y.v),
-       |t AS (SELECT u, p, q FROM w JOIN und ON p = a AND q = b),
+       |t AS (SELECT u, p, q FROM w JOIN und ON p = a AND q = b)""".stripMargin
+
+  def localClusteringOracleSql: String =
+    s"""WITH ${censusCteSql("TRUE")},
        |tv AS (
        |  SELECT v, count(*) AS n_tri
        |  FROM (SELECT u AS v FROM t UNION ALL SELECT p FROM t UNION ALL SELECT q FROM t)
@@ -209,56 +219,31 @@ object Triangles {
         (col("n_triangles") * lit(inv * inv * inv)).as("est_triangles"))
   }
 
+  /** DuckDB oracle for [[statsSampledU]]: [[statsOracleSql]]'s census over
+    * the kept edges, scaled as the Spark twin scales it.
+    */
   def statsSampledUOracleSql(pct: Int = 10): String = {
     val inv = graft.sampling.UniverseSampled.scaleFor(pct)
     val keep = graft.sampling.UniverseSampled.keepSql(
       "CAST(a AS VARCHAR) || '_' || CAST(b AS VARCHAR)", pct)
-    s"""WITH ${PageRank.edgesCteSql},
-       |und AS (
-       |  SELECT src AS a, dst AS b FROM edges
-       |  WHERE src < dst AND ($keep)),
-       |deg AS (
-       |  SELECT v, count(*) AS deg
-       |  FROM (SELECT a AS v FROM und UNION ALL SELECT b AS v FROM und)
-       |  GROUP BY v),
-       |j AS (
-       |  SELECT und.a, und.b, x.deg AS da, y.deg AS db
-       |  FROM und JOIN deg x ON x.v = und.a JOIN deg y ON y.v = und.b),
-       |o AS (
-       |  SELECT CASE WHEN da < db OR (da = db AND a < b) THEN a ELSE b END AS u,
-       |         CASE WHEN da < db OR (da = db AND a < b) THEN b ELSE a END AS v
-       |  FROM j),
-       |w AS (SELECT x.v AS p, y.v AS q FROM o x JOIN o y ON x.u = y.u AND x.v < y.v),
-       |t AS (SELECT count(*) AS n_tri FROM w JOIN und ON p = a AND q = b),
-       |e AS (SELECT count(*) AS n_e FROM und)
-       |SELECT e.n_e AS n_edges_seen, t.n_tri AS n_triangles_seen,
-       |       e.n_e * $inv AS est_edges,
-       |       t.n_tri * ${inv * inv * inv} AS est_triangles
-       |FROM e, t""".stripMargin
+    s"""SELECT n_edges AS n_edges_seen, n_triangles AS n_triangles_seen,
+       |       n_edges * $inv AS est_edges,
+       |       n_triangles * ${inv * inv * inv} AS est_triangles
+       |FROM (${statsSql(keep)})""".stripMargin
   }
 
   /** DuckDB replay: the same orientation, wedge enumeration, and closure
     * probe over the shared edges CTE.
     */
-  def statsOracleSql: String =
-    s"""WITH ${PageRank.edgesCteSql},
-       |und AS (SELECT src AS a, dst AS b FROM edges WHERE src < dst),
-       |deg AS (
-       |  SELECT v, count(*) AS deg
-       |  FROM (SELECT a AS v FROM und UNION ALL SELECT b AS v FROM und)
-       |  GROUP BY v),
-       |j AS (
-       |  SELECT und.a, und.b, x.deg AS da, y.deg AS db
-       |  FROM und JOIN deg x ON x.v = und.a JOIN deg y ON y.v = und.b),
-       |o AS (
-       |  SELECT CASE WHEN da < db OR (da = db AND a < b) THEN a ELSE b END AS u,
-       |         CASE WHEN da < db OR (da = db AND a < b) THEN b ELSE a END AS v
-       |  FROM j),
-       |w AS (SELECT x.v AS p, y.v AS q FROM o x JOIN o y ON x.u = y.u AND x.v < y.v),
-       |t AS (SELECT count(*) AS n_triangles FROM w JOIN und ON p = a AND q = b),
+  def statsOracleSql: String = statsSql("TRUE")
+
+  /** The census row over the canonical edges passing `keep`. */
+  private def statsSql(keep: String): String =
+    s"""WITH ${censusCteSql(keep)},
        |e AS (SELECT count(*) AS n_edges FROM und),
-       |wc AS (SELECT CAST(sum((deg * (deg - 1)) // 2) AS BIGINT) AS n_wedges FROM deg)
-       |SELECT e.n_edges, wc.n_wedges, t.n_triangles,
-       |       (3000 * t.n_triangles) // greatest(wc.n_wedges, 1) AS closure_permille
-       |FROM e, wc, t""".stripMargin
+       |wc AS (SELECT CAST(sum((deg * (deg - 1)) // 2) AS BIGINT) AS n_wedges FROM deg),
+       |tc AS (SELECT count(*) AS n_triangles FROM t)
+       |SELECT e.n_edges, wc.n_wedges, tc.n_triangles,
+       |       (3000 * tc.n_triangles) // greatest(wc.n_wedges, 1) AS closure_permille
+       |FROM e, wc, tc""".stripMargin
 }

@@ -1,9 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.sampling.{Sampled, SamplingConfig}
+import graft.sampling.{Sampled, SamplingConfig, UniverseSampled}
 
 /** Relational analytics over the TPC-H-style tables — demonstrates the
   * sampling/AQP layer on classic warehouse aggregates (the reference's
@@ -40,17 +40,22 @@ object TpchQueries {
         count(lit(1)).as("cnt"))
   }
 
+  /** [[q1]]'s additive aggregates, each HT-scaled to `est_<name>` by the
+    * sampled twins.
+    */
+  private val Q1Sums =
+    Seq("sum_qty", "sum_base_price_c", "sum_disc_price_e4", "sum_charge_e6", "cnt")
+
+  /** [[q1]] over a sample, every additive aggregate scaled by `scale`. */
+  private def q1Estimate(sample: DataFrame, scale: Column => Column): DataFrame =
+    q1(sample).select(
+      col("l_returnflag") +: col("l_linestatus") +:
+        Q1Sums.map(c => scale(col(c)).as(s"est_$c")): _*)
+
   /** Sampled Q1 with HT scale-up on every additive aggregate. */
   def q1Sampled(lineitem: DataFrame, cfg: SamplingConfig): DataFrame = {
     val s = Sampled(lineitem, cfg)
-    val est = q1(s.data)
-    est.select(
-      col("l_returnflag"), col("l_linestatus"),
-      s.htScale(col("sum_qty")).as("est_sum_qty"),
-      s.htScale(col("sum_base_price_c")).as("est_sum_base_price_c"),
-      s.htScale(col("sum_disc_price_e4")).as("est_sum_disc_price_e4"),
-      s.htScale(col("sum_charge_e6")).as("est_sum_charge_e6"),
-      s.htScale(col("cnt")).as("est_cnt"))
+    q1Estimate(s.data, s.htScale(_))
   }
 
   /** Universe-sampled Q1: the hash-range (deterministic) AQP twin of
@@ -62,38 +67,43 @@ object TpchQueries {
     * bit-exactly in DuckDB, so every HT-scaled estimate is oracle-gated
     * (unlike the seeded `_r10` twin, rows-only by construction).
     */
-  def q1SampledUniverse(lineitem: DataFrame, pct: Int = 10): DataFrame = {
-    val scale = lit(graft.sampling.UniverseSampled.scale(pct))
-    q1(graft.sampling.UniverseSampled.sample(lineitem, col("l_orderkey"), pct))
-      .select(
-        col("l_returnflag"), col("l_linestatus"),
-        (col("sum_qty") * scale).as("est_sum_qty"),
-        (col("sum_base_price_c") * scale).as("est_sum_base_price_c"),
-        (col("sum_disc_price_e4") * scale).as("est_sum_disc_price_e4"),
-        (col("sum_charge_e6") * scale).as("est_sum_charge_e6"),
-        (col("cnt") * scale).as("est_cnt"))
+  def q1SampledUniverse(lineitem: DataFrame, pct: Int = 10): DataFrame =
+    q1Estimate(UniverseSampled.sample(lineitem, col("l_orderkey"), pct),
+      _ * lit(UniverseSampled.scale(pct)))
+
+  /** Select-list spellings for the Q1/Q6 oracle templates: an exact
+    * aggregate, or its universe-sampled HT estimate ×1/p.
+    */
+  private def exactAs(agg: String, name: String): String = s"$agg AS $name"
+  private def estimateAs(pct: Int)(agg: String, name: String): String =
+    s"$agg * ${UniverseSampled.scaleSql(pct)} AS est_$name"
+
+  /** The ONE DuckDB spelling of [[q1]] over the lineitems passing `cond`
+    * (a keep-predicate or TRUE), each aggregate projected by `as`.
+    */
+  private def q1OracleSql(cond: String, as: (String, String) => String): String = {
+    val priceC = "CAST(round(l_extendedprice * 100) AS BIGINT)"
+    val discPrice = s"$priceC * (100 - CAST(round(l_discount * 100) AS BIGINT))"
+    val charge = s"$discPrice * (100 + CAST(round(l_tax * 100) AS BIGINT))"
+    s"""SELECT l_returnflag, l_linestatus,
+       |  ${as("CAST(sum(CAST(round(l_quantity) AS BIGINT)) AS BIGINT)", "sum_qty")},
+       |  ${as(s"CAST(sum($priceC) AS BIGINT)", "sum_base_price_c")},
+       |  ${as(s"CAST(sum($discPrice) AS BIGINT)", "sum_disc_price_e4")},
+       |  ${as(s"CAST(sum($charge) AS BIGINT)", "sum_charge_e6")},
+       |  ${as("count(*)", "cnt")}
+       |FROM lineitem
+       |WHERE ($cond)
+       |  AND l_shipdate <= TIMESTAMP '$Q1Cutoff 00:00:00'
+       |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
   }
+
+  val Q1OracleSql: String = q1OracleSql("TRUE", exactAs)
 
   /** DuckDB oracle for [[q1SampledUniverse]] — [[Q1OracleSql]]'s integer
     * aggregates over the hash-range keep-set, each scaled ×1/p.
     */
-  def q1SampledUniverseOracleSql(pct: Int = 10): String = {
-    val keep = graft.sampling.UniverseSampled.keepSql("l_orderkey", pct)
-    val sc = graft.sampling.UniverseSampled.scaleSql(pct)
-    s"""SELECT l_returnflag, l_linestatus,
-       |  CAST(sum(CAST(round(l_quantity) AS BIGINT)) AS BIGINT) * $sc AS est_sum_qty,
-       |  CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT) * $sc AS est_sum_base_price_c,
-       |  CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-       |       * (100 - CAST(round(l_discount * 100) AS BIGINT))) AS BIGINT) * $sc AS est_sum_disc_price_e4,
-       |  CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-       |       * (100 - CAST(round(l_discount * 100) AS BIGINT))
-       |       * (100 + CAST(round(l_tax * 100) AS BIGINT))) AS BIGINT) * $sc AS est_sum_charge_e6,
-       |  count(*) * $sc AS est_cnt
-       |FROM lineitem
-       |WHERE $keep
-       |  AND l_shipdate <= TIMESTAMP '$Q1Cutoff 00:00:00'
-       |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
-  }
+  def q1SampledUniverseOracleSql(pct: Int = 10): String =
+    q1OracleSql(UniverseSampled.keepSql("l_orderkey", pct), estimateAs(pct))
 
   /** TPC-H Q6 (forecasting revenue change): single-table filter-aggregate —
     * the canonical predicate-pushdown showcase. All three filters reach the
@@ -140,34 +150,30 @@ object TpchQueries {
   def q6SampledUniverse(lineitem: DataFrame, pct: Int = 10): DataFrame = {
     val unit = concat(
       col("l_orderkey").cast("string"), lit(":"), col("l_linenumber").cast("string"))
-    q6(graft.sampling.UniverseSampled.sample(lineitem, unit, pct))
-      .select((col("revenue_e4") * lit(graft.sampling.UniverseSampled.scale(pct)))
-        .as("est_revenue_e4"))
+    q6(UniverseSampled.sample(lineitem, unit, pct))
+      .select((col("revenue_e4") * lit(UniverseSampled.scale(pct))).as("est_revenue_e4"))
   }
 
-  /** DuckDB oracle for [[q6SampledUniverse]]. */
-  def q6SampledUniverseOracleSql(pct: Int = 10): String = {
-    val keep = graft.sampling.UniverseSampled.keepSql(
-      "CAST(l_orderkey AS VARCHAR) || ':' || CAST(l_linenumber AS VARCHAR)", pct)
-    s"""SELECT CAST(coalesce(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-       |       * CAST(round(l_discount * 100) AS BIGINT)), 0) AS BIGINT)
-       |       * ${graft.sampling.UniverseSampled.scaleSql(pct)} AS est_revenue_e4
+  /** The ONE DuckDB spelling of [[q6]] over the lineitems passing `cond`. */
+  private def q6OracleSql(cond: String, as: (String, String) => String): String = {
+    val revenue = "CAST(coalesce(sum(CAST(round(l_extendedprice * 100) AS BIGINT)" +
+      " * CAST(round(l_discount * 100) AS BIGINT)), 0) AS BIGINT)"
+    s"""SELECT ${as(revenue, "revenue_e4")}
        |FROM lineitem
-       |WHERE $keep
+       |WHERE ($cond)
        |  AND l_shipdate >= TIMESTAMP '$Q6Start 00:00:00'
        |  AND l_shipdate < TIMESTAMP '$Q6End 00:00:00'
        |  AND l_discount >= 0.05 AND l_discount <= 0.07
        |  AND l_quantity < 24""".stripMargin
   }
 
-  val Q6OracleSql: String =
-    s"""SELECT CAST(coalesce(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-      |       * CAST(round(l_discount * 100) AS BIGINT)), 0) AS BIGINT) AS revenue_e4
-      |FROM lineitem
-      |WHERE l_shipdate >= TIMESTAMP '$Q6Start 00:00:00'
-      |  AND l_shipdate < TIMESTAMP '$Q6End 00:00:00'
-      |  AND l_discount >= 0.05 AND l_discount <= 0.07
-      |  AND l_quantity < 24""".stripMargin
+  /** DuckDB oracle for [[q6SampledUniverse]]. */
+  def q6SampledUniverseOracleSql(pct: Int = 10): String =
+    q6OracleSql(UniverseSampled.keepSql(
+      "CAST(l_orderkey AS VARCHAR) || ':' || CAST(l_linenumber AS VARCHAR)", pct),
+      estimateAs(pct))
+
+  val Q6OracleSql: String = q6OracleSql("TRUE", exactAs)
 
   val Q3Cutoff = "1998-06-15"
 
@@ -301,20 +307,6 @@ object TpchQueries {
        |JOIN region ON n_regionkey = r_regionkey
        |WHERE r_name = '$regionName'
        |GROUP BY 1 ORDER BY 1""".stripMargin
-
-  val Q1OracleSql: String =
-    s"""SELECT l_returnflag, l_linestatus,
-       |  CAST(sum(CAST(round(l_quantity) AS BIGINT)) AS BIGINT) AS sum_qty,
-       |  CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS sum_base_price_c,
-       |  CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-       |       * (100 - CAST(round(l_discount * 100) AS BIGINT))) AS BIGINT) AS sum_disc_price_e4,
-       |  CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-       |       * (100 - CAST(round(l_discount * 100) AS BIGINT))
-       |       * (100 + CAST(round(l_tax * 100) AS BIGINT))) AS BIGINT) AS sum_charge_e6,
-       |  count(*) AS cnt
-       |FROM lineitem
-       |WHERE l_shipdate <= TIMESTAMP '$Q1Cutoff 00:00:00'
-       |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
   val Q10Start = "1996-10-01"
   val Q10End = "1997-01-01"

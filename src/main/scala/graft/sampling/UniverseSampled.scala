@@ -80,16 +80,30 @@ object UniverseSampled {
   def residue(unit: Column): Column =
     Hashing.hash60(concat(lit(Salt), unit.cast("string"))) % RangeMod
 
+  /** Plan-build guard shared by [[keep]], [[keepSql]] and [[scale]], so
+    * every sampled twin inherits it: a rate above [[RangeMod]] keeps every
+    * row yet scales by RangeMod/pct < 1 (pct = 200 halves the exact
+    * answer), and pct ≤ 0 keeps nothing and scales to ∞ or NaN. Non-divisor
+    * rates stay legal here; only [[scaleFor]] needs pct | RangeMod.
+    */
+  private def checkPct(pct: Int): Unit =
+    require(pct >= 1 && pct <= RangeMod,
+      s"universe sampling needs pct in [1, $RangeMod] (got $pct)")
+
   /** Keep-predicate: hash of the salted unit in [0, pct). */
-  def keep(unit: Column, pct: Int): Column =
+  def keep(unit: Column, pct: Int): Column = {
+    checkPct(pct)
     residue(unit) < pct
+  }
 
   /** DuckDB text of [[keep]] for oracle generation; `unitExpr` is a SQL
     * expression for the unit column (cast to VARCHAR here, mirroring the
     * Spark-side string cast).
     */
-  def keepSql(unitExpr: String, pct: Int): String =
+  def keepSql(unitExpr: String, pct: Int): String = {
+    checkPct(pct)
     s"${Hashing.hash60Sql(s"'$Salt' || CAST($unitExpr AS VARCHAR)")} % $RangeMod < $pct"
+  }
 
   /** The `pct`-percent universe sample of `df` by `unit`. */
   def sample(df: DataFrame, unit: Column, pct: Int): DataFrame =
@@ -98,7 +112,10 @@ object UniverseSampled {
   /** Horvitz–Thompson scale factor 1/p (exact in IEEE 754 for the divisors
     * of 100 used here).
     */
-  def scale(pct: Int): Double = RangeMod.toDouble / pct
+  def scale(pct: Int): Double = {
+    checkPct(pct)
+    RangeMod.toDouble / pct
+  }
 
   /** SQL literal of [[scale]] — e.g. "10.0", so `count(*) * 10.0` is a
     * DOUBLE in DuckDB exactly like Spark's `cnt * lit(10.0)`.

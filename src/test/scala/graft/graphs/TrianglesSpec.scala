@@ -87,4 +87,19 @@ class TrianglesSpec extends SparkSpec {
     assert(maxOut.toDouble <= math.sqrt(2.0 * m) + 1,
       s"max oriented out-degree $maxOut exceeds sqrt(2m)=${math.sqrt(2.0 * m)}")
   }
+
+  test("pct=100 sampled census equals the exact census") {
+    assumeTestdata(sf001)
+    val events = Tables.events(spark, sf001)
+    val exact = Triangles.stats(events).collect().head
+    val full = Triangles.statsSampledU(events, pct = 100).collect().head
+    assert(exact.getAs[Long]("n_triangles") > 0L)
+    // m = 1: seen counts and estimates both equal the exact census
+    Seq("n_edges_seen", "est_edges").foreach { c =>
+      assert(full.getAs[Long](c) === exact.getAs[Long]("n_edges"))
+    }
+    Seq("n_triangles_seen", "est_triangles").foreach { c =>
+      assert(full.getAs[Long](c) === exact.getAs[Long]("n_triangles"))
+    }
+  }
 }

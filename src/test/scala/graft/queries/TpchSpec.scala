@@ -52,6 +52,18 @@ class TpchSpec extends SparkSpec {
     }
   }
 
+  test("universe-sampled q6: pct=100 equals exact q6; an out-of-range pct fails at plan build") {
+    val li = Tables.lineitem(spark, sf01)
+    val exact = TpchQueries.q6(li).collect().head.getLong(0)
+    assert(exact > 0L)
+    assert(TpchQueries.q6SampledUniverse(li, 100).collect().head.getDouble(0) === exact.toDouble)
+    // pct = 200 once kept every row at scale 0.5 (half the exact answer)
+    // and pct = 0 returned NaN; both must be rejected before any job runs
+    Seq(0, 200).foreach { pct =>
+      intercept[IllegalArgumentException](TpchQueries.q6SampledUniverse(li, pct))
+    }
+  }
+
   test("sampled q6: HT estimate tracks exact revenue within sampling noise") {
     val exact = TpchQueries.q6(Tables.lineitem(spark, sf01))
       .collect().head.getLong(0).toDouble

@@ -1,5 +1,6 @@
 package graft.sampling
 
+import org.apache.spark.sql.functions.col
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -35,6 +36,20 @@ class DerivationPropertySpec extends AnyFunSuite {
     }
     val res = SCTest.check(params, prop)
     assert(res.passed, res.status.toString)
+    // keep and the double-typed scale, which every sampled twin builds on:
+    // any rate in [1, mod] is legal (non-divisors too), anything outside
+    // fails at plan build — pct = 200 once kept every row at scale 0.5
+    (1L to mod).foreach { pct =>
+      UniverseSampled.keep(col("u"), pct.toInt)
+      assert(UniverseSampled.scale(pct.toInt) === mod.toDouble / pct)
+    }
+    val outOfRange = Gen.chooseNum(-1000, 1000).suchThat(p => p < 1 || p > mod)
+    val rejects = Prop.forAll(outOfRange) { p =>
+      Prop.throws(classOf[IllegalArgumentException])(UniverseSampled.keep(col("u"), p)) &&
+        Prop.throws(classOf[IllegalArgumentException])(UniverseSampled.scale(p))
+    }
+    val rejected = SCTest.check(params, rejects)
+    assert(rejected.passed, rejected.status.toString)
   }
 
   test("bandBits: smallest qualifying width, clamped, monotone") {

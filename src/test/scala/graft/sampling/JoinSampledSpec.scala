@@ -156,6 +156,35 @@ class JoinSampledSpec extends SparkSpec {
     }
   }
 
+  test("pct=100 twins equal their exact builders; the bounds twins report err_bound 0.0") {
+    assumeTestdata(sf001)
+    val customer = Tables.customer(spark, sf001)
+    def rows(df: org.apache.spark.sql.DataFrame, cols: String*) =
+      df.select(cols.map(col): _*).collect().toSeq
+    Seq(
+      ("month",
+        JoinSampled.revenueMonthly(orders, lineitem),
+        JoinSampled.revenueMonthlySampledU(orders, lineitem, pct = 100),
+        JoinSampled.revenueMonthlySampledUWithBounds(orders, lineitem, pct = 100)),
+      ("c_mktsegment",
+        JoinSampled.revenueBySegment(customer, orders, lineitem),
+        JoinSampled.revenueBySegmentChainSampledU(customer, orders, lineitem, pct = 100),
+        JoinSampled.revenueBySegmentChainSampledUWithBounds(
+          customer, orders, lineitem, pct = 100))
+    ).foreach { case (group, exact, sampled, bounds) =>
+      val want = rows(exact, group, "revenue_e4", "n_items")
+      assert(want.nonEmpty)
+      // m = 1: every est_* column is its exact column, group for group
+      assert(rows(sampled, group, "est_revenue_e4", "est_items") === want)
+      assert(rows(bounds, group, "est_revenue_e4", "est_items") === want)
+      // n_hat = n_keys at full rate, so the FPC term (and the bound) is zero
+      rows(bounds, "n_keys", "err_bound").foreach { r =>
+        assert(r.getLong(0) >= 1L)
+        assert(r.getDouble(1) === 0.0)
+      }
+    }
+  }
+
   test("forced-shuffle regime: the sample cuts BOTH join exchanges ~×p (the 100 TB claim, measured)") {
     assumeTestdata(sf001)
     // At fixture scale the sampled orders side broadcasts, so the
