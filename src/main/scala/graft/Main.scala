@@ -46,7 +46,7 @@ object Main {
   private def isTableDir(in: String, table: String): Boolean =
     new java.io.File(in, s"$table.parquet").exists()
 
-  private def buildSession(): SparkSession = {
+  private[graft] def buildSession(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val spark = GraftSession.builder(s"local[$cpus]", cpus)
       .getOrCreate()
@@ -107,14 +107,16 @@ object Main {
     rpt
   }
 
+  private def usage(): Nothing = {
+    System.err.println(
+      "Usage: graft.Main <randwordcount|randcharcount|randapachelog|randwireless> " +
+        "<in> <out> [task] [ratio|confLevel,errorRate,bitsOfInputLength]\n" +
+        "   or: graft.Main compare <commonPath> <run0> <run1> […runN]")
+    sys.exit(2)
+  }
+
   def main(args: Array[String]): Unit = {
-    if (args.length < 3) {
-      System.err.println(
-        "Usage: graft.Main <randwordcount|randcharcount|randapachelog|randwireless> " +
-          "<in> <out> [task] [ratio|confLevel,errorRate,bitsOfInputLength]\n" +
-          "   or: graft.Main compare <commonPath> <run0> <run1> […runN]")
-      sys.exit(2)
-    }
+    if (args.length < 3) usage()
     val job = args(0)
     if (job == "compare") {
       // the reference's standalone cross-run comparator
@@ -134,7 +136,12 @@ object Main {
     val (task, samplingArg) =
       if (job == "randapachelog") (args.lift(3), args.lift(4))
       else (None, args.lift(3))
-    val cfg = samplingArg.map(SamplingConfig.parse(_)).getOrElse(SamplingConfig())
+    val cfg =
+      try samplingArg.map(SamplingConfig.parse(_)).getOrElse(SamplingConfig())
+      catch { case e: IllegalArgumentException =>
+        System.err.println(e.getMessage)
+        usage()
+      }
     val spark = buildSession()
     val rpt = runJob(spark, job, args(1), args(2), task, cfg)
     println(rpt.toString)

@@ -1,107 +1,59 @@
 package graft
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
-import graft.compare.ResultComparator
-import graft.queries.{ReferenceQueries => RQ, Tables}
-import graft.sampling.{SamplingConfig, SamplingReport}
-import graft.sinks.{ReportSink, TextKVSink}
+import graft.compare.CompareRuns
+import graft.queries.{ReferenceQueries => RQ}
+import graft.sampling.SamplingConfig
 
-/** The reference's end-to-end experiment protocol as a runnable harness:
-  * run a query exact (ratio 1.0) and at a ladder of sampling ratios, write
-  * each run's key-sorted K1 output + K2 report, and measure each sampled
-  * run's data error rate against the exact run — exactly what
-  * `randWordCount.sh:22-26` + `RSMRResultComparator.java:43-88` did with
-  * shell scripts and a standalone JVM tool, here as one Spark driver
-  * program.
+/** The reference's experiment protocol — one job run per sampling ratio,
+  * then the standalone comparator over the runs (`randWordCount.sh:22-26`
+  * + `RSMRResultComparator.java:35-88`) — as one driver program. Every
+  * reference job runs through [[Main.runJob]] at each ratio and
+  * [[graft.compare.CompareRuns]] scores the runs against the first ratio's
+  * run: the CLI protocol in a loop.
   *
-  * Usage: `runMain graft.RatioLadder <sfDir> <outDir> [r1,r2,…]`
+  * Usage: `runMain graft.RatioLadder <sfDir> <outDir> [r1,r2,…] [name,…]`
   * (default ladder 1.0,0.5,0.25,0.1,0.01 — the reference's published
-  * ladder, README.md:48).
+  * ladder, README.md:48 — over every name in [[Jobs]]; the first ratio is
+  * the comparator's baseline).
+  *
+  * Output layout, per ladder name (`randwordcount`, `randcharcount`,
+  * `randapachelog_<task>`, `randwireless`): `<outDir>/<name>/r<ratio>` is
+  * the run's key-sorted K1 sink and `<outDir>/<name>/r<ratio>.result.txt`
+  * its K2 report. `graft.Main compare <outDir>/<name>/r 1.0 0.5 …` replays
+  * any ladder.
+  *
+  * The object also declares the universe-sampled ladder queries
+  * (`*_ladder_u`), the oracle-gated form of the same protocol.
   */
 object RatioLadder {
 
-  final case class Rung(
-      ratio: Double,
-      report: SamplingReport,
-      dataErrorRate: Double,
-      wallSec: Double)
+  /** The reference jobs, by ladder name: (job, task) for [[Main.runJob]]. */
+  val Jobs: ListMap[String, (String, Option[String])] =
+    ListMap(
+      Seq("randwordcount", "randcharcount").map(j => j -> (j, None)) ++
+        Main.LogTasks.keys.toSeq.sorted.map(t =>
+          s"randapachelog_$t" -> ("randapachelog", Some(t))) :+
+        ("randwireless" -> ("randwireless", None)): _*)
 
-  /** Run the ladder for one count-shaped query. */
-  def run(
-      source: DataFrame,
-      query: DataFrame => DataFrame,
-      keys: Seq[String],
-      ratios: Seq[Double],
+  /** Run each named job at every ratio, then compare its runs. */
+  def ladder(
+      spark: SparkSession,
+      sfDir: String,
       outDir: String,
-      countCol: String = "cnt"): Seq[Rung] = {
-    val exact = query(source)
-    TextKVSink.write(exact, keys.head, countCol, s"$outDir/exact")
-    ratios.filter(_ < 1.0).map { r =>
-      val t0 = System.nanoTime()
-      val s = graft.sampling.Sampled(source, SamplingConfig(ratio = r))
-      val raw = query(s.data)
-      // K1 lines go under out/ so the sink directory stays pure key\tvalue
-      // (report.json / result.txt live beside it, not inside it). The sink
-      // carries the UNSCALED sampled aggregate — the reference's jobs wrote
-      // raw sample counts and left HT scaling to the comparator
-      // (RSMRResultComparator.java:69-71), so the on-disk protocol must too
-      // (graft.Main compare replays it).
-      TextKVSink.write(raw, keys.head, countCol, s"$outDir/ratio_$r/out")
-      val est = raw.withColumn(s"est_$countCol", s.htScale(col(countCol))).drop(countCol)
-      val err = ResultComparator.dataErrorRate(exact, est, keys, countCol, s"est_$countCol")
-      val rpt = s.report()
-      ReportSink.emit(rpt, s"$outDir/ratio_$r/report.json")
-      // the reference's cross-run protocol: the text report is persisted
-      // (randWordCount.sh:25 `| tail >> result.txt`) and machine-parsed by
-      // later comparator runs — SamplingReport.parse reads this back
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$outDir/ratio_$r/result.txt"), rpt.toString)
-      Rung(r, rpt, err, (System.nanoTime() - t0) / 1e9)
+      ratios: Seq[Double],
+      names: Seq[String]): Seq[(String, Seq[CompareRuns.RunResult])] =
+    names.map { name =>
+      val (job, task) = Jobs.getOrElse(name, throw new IllegalArgumentException(
+        s"unknown ladder job $name (${Jobs.keys.mkString(", ")})"))
+      ratios.foreach(r =>
+        Main.runJob(spark, job, sfDir, s"$outDir/$name/r$r", task, SamplingConfig(ratio = r)))
+      name -> CompareRuns.compare(spark, s"$outDir/$name/r", ratios.map(_.toString))
     }
-  }
-
-  /** One ladder family: (name, source, query, key column, count column). */
-  final case class Family(
-      name: String,
-      source: DataFrame,
-      query: DataFrame => DataFrame,
-      key: String,
-      countCol: String = "cnt")
-
-  /** Every job family the reference ran its ladder over: word count
-    * (randWordCount.sh:22-26), char count (randCharCount.sh:22-26), the
-    * seven Apache-log tasks (randApacheLogAnalysis.sh:22-26 — here in their
-    * honest synthesize→parse CLF form), and the wireless link analysis.
-    */
-  def families(spark: SparkSession, sfDir: String): Seq[Family] = {
-    val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
-    val events = Tables.events(spark, sfDir)
-    def clf(q: DataFrame => DataFrame): DataFrame => DataFrame =
-      e => q(RQ.clfParsed(e))
-    Seq(
-      Family("wordcount", docs, RQ.wordCount(_), "word"),
-      Family("charcount", docs, RQ.charCount(_), "ch"),
-      Family("log_hack", events, clf(RQ.clfHack), "host"),
-      Family("log_host", events, clf(RQ.clfHost), "host"),
-      Family("log_dateweek", events, clf(RQ.clfDateweek), "dateweek"),
-      Family("log_size", events, clf(RQ.clfSize), "bucket"),
-      Family("log_totalsize", events, clf(RQ.clfTotalsize), "key", countCol = "total"),
-      Family("log_pagesize", events, clf(RQ.clfPagesize), "page", countCol = "total"),
-      Family("log_page", events, clf(RQ.clfPage), "page"),
-      Family("wireless", events, RQ.wirelessLinks(_), "link"),
-      // the curation-layer AQP families (beyond the reference's surface):
-      // quality histogram + corpus token total under the same ladder
-      // protocol, so the T4 bound is proven on the LLM-pipeline shapes too
-      Family("text_quality", docs, graft.text.TextAnalysis.qualityDistribution(_), "bucket"),
-      Family("text_tokens", docs, graft.text.TextAnalysis.tokenTotals(_), "key",
-        countCol = "total"))
-  }
-
-  /** Run the full ladder for one family into `outDir/<family>/`. */
-  def runFamily(f: Family, ratios: Seq[Double], outDir: String): Seq[Rung] =
-    run(f.source, f.query, Seq(f.key), ratios, s"$outDir/${f.name}", f.countCol)
 
   /** The ladder rungs of the DECLARED query form, as keep-percentages. */
   val DeclaredPcts: Seq[Int] = Seq(100, 50, 25, 10)
@@ -109,7 +61,7 @@ object RatioLadder {
   /** The reference's full experiment protocol as ONE declared, oracle-
     * gated query (VERDICT r15 item 6): the word-count family run at the
     * published ladder p ∈ {1.0, 0.5, 0.25, 0.1} under UNIVERSE sampling
-    * (hash-range keeps — deterministic, so unlike the seeded-RNG harness
+    * (hash-range keeps — deterministic, so unlike the seeded-RNG [[ladder]]
     * above, every rung replays bit-for-bit in DuckDB), each rung emitting
     * the comparator's error measure (`RSMRResultComparator.java:58-82`:
     * Σ|exact − HT-scaled| / Σ exact, absent keys as 0 — here as exact
@@ -291,23 +243,12 @@ object RatioLadder {
     val ratios = args.lift(2)
       .map(_.split(",").map(_.toDouble).toSeq)
       .getOrElse(Seq(1.0, 0.5, 0.25, 0.1, 0.01))
-    val only = args.lift(3).map(_.split(",").toSet) // optional family filter
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
-
-    families(spark, sfDir)
-      .filter(f => only.forall(_.contains(f.name)))
-      .foreach { f =>
-        println(s"=== ${f.name} ===")
-        runFamily(f, ratios, outDir).foreach { r =>
-          println(r.report.toString)
-          // the comparator's terminal line (RSMRResultComparator.java:80-88)
-          println(f"[Data error rate] ${r.dataErrorRate * 100}%.2f%%\n")
-        }
-      }
+    val names = args.lift(3).map(_.split(",").toSeq).getOrElse(Jobs.keys.toSeq)
+    val spark = Main.buildSession()
+    ladder(spark, sfDir, outDir, ratios, names).foreach { case (name, runs) =>
+      println(s"=== $name ===")
+      println(CompareRuns.render(runs) + "\n")
+    }
     spark.stop()
   }
 }

@@ -23,9 +23,10 @@ object SparkEntry {
     * (SURVEY.md §7.3).
     */
   def entry(spark: SparkSession): DataFrame =
-    RQ.wordCountSampled(
+    RQ.sampled(
       Tables.documents(spark, "/root/testdata/sf0.001"),
-      SamplingConfig(ratio = 0.1))
+      SamplingConfig(ratio = 0.1),
+      RQ.wordCount(_))._2
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -90,7 +91,7 @@ object SparkEntry {
     // --- approximate mode (seeded sample + HT scale-up; no SQL oracle:
     // --- an external engine can't reproduce Spark's RNG stream) ---
     "wordcount_sampled_r10" -> ((s, dir) =>
-      RQ.wordCountSampled(Tables.documents(s, dir), SamplingConfig(ratio = 0.1))
+      RQ.sampled(Tables.documents(s, dir), SamplingConfig(ratio = 0.1), RQ.wordCount(_))._2
         .orderBy("word")),
     "wireless_sampled_r10" -> ((s, dir) =>
       RQ.sampled(Tables.events(s, dir), SamplingConfig(ratio = 0.1), RQ.wirelessLinks)._2

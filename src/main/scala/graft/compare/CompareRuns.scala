@@ -34,30 +34,18 @@ object CompareRuns {
       reportText: Option[String],
       dataErrorRate: Option[Double]) // None for the baseline run
 
-  /** K1 location inside a run dir: RatioLadder keeps the sink pure under
-    * `<dir>/out` (report beside it); a plain runJob/reference dir IS the
-    * sink.
-    */
-  private def kvPath(runDir: String): String =
-    if (new java.io.File(runDir, "out").isDirectory) s"$runDir/out" else runDir
-
   /** result.txt candidates: inside the run dir (the reference layout,
-    * RSMRResultComparator.java:93), the `<out>.result.txt` sibling
-    * ([[graft.Main.runJob]]'s naming), or — ONLY for a sink dir literally
-    * named `out` — beside it ([[graft.RatioLadder]]'s `<rung>/out` +
-    * `<rung>/result.txt` layout). The parent fallback must not apply to
-    * arbitrary run dirs: a report-less run sharing a parent with another
-    * run's result.txt would silently score with the wrong designed rate
-    * instead of the documented exact=1.0 default (ADVICE r5).
+    * RSMRResultComparator.java:93) or the `<out>.result.txt` sibling
+    * ([[graft.Main.runJob]]'s naming). Never the parent dir: a report-less
+    * run sharing a parent with another run's result.txt would silently
+    * score with the wrong designed rate instead of the documented
+    * exact=1.0 default (ADVICE r5).
     */
   private def findReportText(runDir: String): Option[String] = {
     val f = new java.io.File(runDir)
-    val candidates = Seq(
+    Seq(
       new java.io.File(f, "result.txt"),
-      new java.io.File(f.getParentFile, f.getName + ".result.txt")) ++
-      (if (f.getName == "out") Seq(new java.io.File(f.getParentFile, "result.txt"))
-       else Nil)
-    candidates
+      new java.io.File(f.getParentFile, f.getName + ".result.txt"))
       .find(_.isFile)
       .map(p => new String(java.nio.file.Files.readAllBytes(p.toPath), "UTF-8"))
   }
@@ -81,7 +69,7 @@ object CompareRuns {
 
   /** Compare `runs` (first = baseline, largest ratio — the reference's
     * stated convention). A run without a result.txt is treated as exact
-    * (ratio 1.0), covering RatioLadder's report-less `exact` sink.
+    * (ratio 1.0).
     */
   def compare(spark: SparkSession, commonPath: String, runs: Seq[String]): Seq[RunResult] = {
     require(runs.size >= 2, "compare needs a baseline run and at least one run to score")
@@ -90,7 +78,7 @@ object CompareRuns {
     val ratios = reports.map(_.map(SamplingReport.parse(_).designedRate).getOrElse(1.0))
     // readParts, not read: the reference layout keeps result.txt INSIDE the
     // run dir beside part-r-00000 — it must not be ingested as K1 rows
-    val kvs = dirs.map(d => TextKVSink.readParts(spark, kvPath(d)))
+    val kvs = dirs.map(TextKVSink.readParts(spark, _))
     runs.indices.map { i =>
       val rate =
         if (i == 0) None

@@ -3,9 +3,12 @@ package graft.compare
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Exact-vs-approximate error measurement (operator T7) — the Spark-native
-  * replacement for the reference's single-threaded sorted-merge comparator
-  * (RSMRResultComparator.java:43-82).
+/** Exact-vs-approximate error measurement (operator T7) over in-memory
+  * frames — the reference's sorted-merge comparator formula
+  * (RSMRResultComparator.java:43-82) for an exact baseline, which the
+  * sampling specs measure against. The on-disk cross-run comparator is
+  * [[CompareRuns]]; it divides by Σ c0/r0 and ignores keys missing from
+  * run 0, so the two differ when run 0 is itself sampled.
   *
   * The reference merges key-sorted text outputs and accumulates
   *   dataErrorRate = Σ|exact − sampled/ratio| / Σ exact
@@ -39,16 +42,5 @@ object ResultComparator {
       .head()
     if (row.isNullAt(1) || row.getDouble(1) == 0.0) 0.0
     else row.getDouble(0) / row.getDouble(1)
-  }
-
-  /** Convenience: measure a raw (unscaled) sampled aggregate at `ratio`. */
-  def dataErrorRateUnscaled(
-      exact: DataFrame,
-      sampledAgg: DataFrame,
-      keys: Seq[String],
-      valueCol: String,
-      ratio: Double): Double = {
-    val scaled = sampledAgg.withColumn("__scaled", col(valueCol) / lit(ratio)).drop(valueCol)
-    dataErrorRate(exact, scaled, keys, valueCol, "__scaled")
   }
 }

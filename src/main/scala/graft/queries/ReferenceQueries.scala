@@ -146,7 +146,7 @@ object ReferenceQueries {
   // The other five log tasks live exclusively in their CLF form (clf*
   // below) — the round-1 column analogs were removed once the real
   // parse-based pipelines landed. logHost/logSize analogs are kept as the
-  // simple aggregate shapes the sampling specs and RatioLadder exercise.
+  // simple aggregate shapes the sampling specs exercise.
 
   /** A2 `host`: request count per host analog (RandomizedApacheLogAnalysis.java:77-80). */
   def logHost(events: DataFrame): DataFrame =
@@ -349,18 +349,6 @@ object ReferenceQueries {
       .groupBy(col("dow"))
       .pivot("event_type", EventTypes)
       .agg(sum(col("cents")))
-
-  /** Sampled word count with Horvitz–Thompson scale-up: the reference's
-    * flagship approximate query (SURVEY.md §7.3). Counts computed on a
-    * seeded Bernoulli sample, scaled by 1/ratio — the estimator the
-    * reference's comparator applies (RSMRResultComparator.java:58-71).
-    */
-  def wordCountSampled(docs: DataFrame, cfg: SamplingConfig): DataFrame = {
-    val s = Sampled(docs, cfg)
-    wordCount(s.data)
-      .withColumn("est_cnt", s.htScale(col("cnt")))
-      .drop("cnt")
-  }
 
   /** Sampled variant of any of the count-shaped pipelines above. */
   def sampled(

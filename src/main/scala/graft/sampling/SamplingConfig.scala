@@ -42,16 +42,23 @@ object SamplingConfig {
 
   /** Parse the reference CLI argument format: `ratio` or
     * `confidence,errorBound,inputBits` (RandomSamplingUtil.java:129-143).
+    * Any other field count, or a non-numeric field, throws an
+    * IllegalArgumentException naming the format; numeric values out of
+    * range are left to [[SamplingConfig.resolvedRatio]]'s T5 resolution.
     */
   def parse(arg: String, seed: Long = DefaultSeed): SamplingConfig = {
-    val parts = arg.split(",")
-    if (parts.length > 1)
-      SamplingConfig(
-        ratio = -1,
-        confidence = parts(0).toDouble,
-        errorBound = parts(1).toDouble,
-        inputBits = parts(2).toInt,
-        seed = seed)
-    else SamplingConfig(ratio = parts(0).toDouble, seed = seed)
+    def bad = new IllegalArgumentException(
+      s"bad sampling argument '$arg': expected ratio|confLevel,errorRate,bitsOfInputLength")
+    try arg.split(",", -1) match {
+      case Array(ratio) => SamplingConfig(ratio = ratio.toDouble, seed = seed)
+      case Array(conf, err, bits) =>
+        SamplingConfig(
+          ratio = -1,
+          confidence = conf.toDouble,
+          errorBound = err.toDouble,
+          inputBits = bits.toInt,
+          seed = seed)
+      case _ => throw bad
+    } catch { case _: NumberFormatException => throw bad }
   }
 }

@@ -11,9 +11,11 @@ import org.apache.spark.sql.functions._
   * part of the observable contract, so the writer sorts explicitly —
   * MapReduce got it from the shuffle, Spark must ask.
   *
-  * K2: the run report, printed to stdout and persisted (the reference wrote
-  * it to a ZooKeeper znode and stdout, RandomSamplingUtil.java:318-327; we
-  * write a JSON file next to stdout).
+  * K2, the run report, is printed to stdout and persisted as the text
+  * `result.txt` beside the sink ([[graft.Main.runJob]]; the reference wrote
+  * it to a ZooKeeper znode and stdout, RandomSamplingUtil.java:318-327, and
+  * its scripts appended it to `result.txt`);
+  * [[graft.sampling.SamplingReport.parse]] reads it back.
   */
 object TextKVSink {
 
@@ -67,26 +69,5 @@ object TextKVSink {
           .map(_.getPath.toString).sorted.toSeq
       else Seq.empty
     if (parts.isEmpty) read(spark, dir) else read(spark, parts: _*)
-  }
-}
-
-/** K2: sampling-report emission. */
-object ReportSink {
-
-  /** NaN/Infinity are not valid JSON number literals (a 0-row sample makes
-    * actualRate 0/0) — emit null so downstream parsers never see a broken
-    * file.
-    */
-  private def num(d: Double): String = if (java.lang.Double.isFinite(d)) d.toString else "null"
-
-  /** Print the report (reference stdout contract) and persist it as JSON. */
-  def emit(report: graft.sampling.SamplingReport, path: String): Unit = {
-    println(report.toString)
-    val json =
-      s"""{"jobId":${report.jobId},"total":${report.total},"sampled":${report.sampled},
-         |"designedRate":${num(report.designedRate)},"actualRate":${num(report.actualRate)},
-         |"confidence":${num(report.confidence)},"errorRate":${num(report.errorRate)},
-         |"timeCostSec":${num(report.timeCostSec)}}""".stripMargin.replace("\n", "")
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(path), json)
   }
 }

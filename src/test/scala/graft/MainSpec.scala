@@ -78,28 +78,17 @@ class MainSpec extends SparkSpec {
     val results = CompareRuns.compare(spark, base, Seq("1.0", "0.5"))
     assert(results.head.ratio === 1.0 && results.head.dataErrorRate.isEmpty)
     assert(results(1).ratio === 0.5)
-    // must equal the in-memory comparator's unscaled-run measurement
-    val expected = ResultComparator.dataErrorRateUnscaled(
+    // must equal the in-memory comparator over the run scaled by 1/0.5
+    val expected = ResultComparator.dataErrorRate(
       RQ.wordCount(Tables.documents(spark, sf001)),
       TextKVSink.read(spark, base + "0.5")
-        .select(col("key").as("word"), col("value").cast("long").as("cnt")),
-      Seq("word"), "cnt", 0.5)
+        .select(col("key").as("word"), (col("value").cast("long") / 0.5).as("est_cnt")),
+      Seq("word"))
     assert(math.abs(results(1).dataErrorRate.get - expected) < 1e-9)
     val text = CompareRuns.render(results)
     assert(text.contains("=== Result with sampling ratio 0.5==="))
     assert(text.contains("[Designed sample rate]")) // report lines replayed
     assert(text.contains("[Data error rate]"))
-  }
-
-  test("compare subcommand over a RatioLadder output directory matches the rung") {
-    import graft.compare.CompareRuns
-    val out = tmp("graft_cmp_ladder")
-    val fam = RatioLadder.families(spark, sf001).find(_.name == "wordcount").get
-    val rungs = RatioLadder.runFamily(fam, Seq(1.0, 0.5), out)
-    val results = CompareRuns.compare(spark, s"$out/wordcount/", Seq("exact", "ratio_0.5"))
-    assert(results.head.ratio === 1.0) // report-less exact sink → ratio 1.0
-    assert(results(1).ratio === 0.5)
-    assert(math.abs(results(1).dataErrorRate.get - rungs.head.dataErrorRate) < 1e-9)
   }
 
   test("compare handles the reference's result.txt-inside-run-dir layout") {
@@ -131,8 +120,8 @@ class MainSpec extends SparkSpec {
 
   test("a report-less run dir does NOT inherit a sibling result.txt (exact default)") {
     import graft.compare.CompareRuns
-    // parent dir holds result.txt + two plain run dirs; neither is named
-    // 'out', so the parent fallback must not apply and both score as exact
+    // parent dir holds result.txt + two plain run dirs; the parent's report
+    // must not apply to either, so both score as exact
     val parent = tmp("graft_cmp_orphan")
     val p = java.nio.file.Paths.get(parent)
     for (r <- Seq("a", "b")) {

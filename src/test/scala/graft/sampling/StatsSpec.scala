@@ -85,5 +85,10 @@ class StatsSpec extends AnyFunSuite {
     assert(SamplingConfig.parse("0.5").resolvedRatio == 0.5)
     val p = SamplingConfig.parse("0.95,0.01,6")
     assert(math.abs(p.resolvedRatio - 0.009512640599680667) < Eps)
+    // exactly 1 or 3 numeric fields; anything else names the format
+    Seq("0.95,0.02", "0.95,0.02,6,9", "abc").foreach { bad =>
+      val e = intercept[IllegalArgumentException](SamplingConfig.parse(bad))
+      assert(e.getMessage.contains("ratio|confLevel,errorRate,bitsOfInputLength"), bad)
+    }
   }
 }

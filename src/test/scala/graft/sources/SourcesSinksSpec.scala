@@ -6,10 +6,10 @@ import graft.SparkSpec
 import graft.compare.ResultComparator
 import graft.queries.{ReferenceQueries => RQ, Tables}
 import graft.sampling.{Sampled, SamplingConfig}
-import graft.sinks.{ReportSink, TextKVSink}
+import graft.sinks.TextKVSink
 
-/** Source/sink contracts: XML and text ingestion round-trips, the K1
-  * key-sorted tab-separated sink, and the K2 report sink.
+/** Source/sink contracts: XML and text ingestion round-trips and the K1
+  * key-sorted tab-separated sink.
   */
 class SourcesSinksSpec extends SparkSpec {
 
@@ -119,15 +119,5 @@ class SourcesSinksSpec extends SparkSpec {
     // the sampled pipeline composes over the compressed source too
     val s = Sampled(lines, SamplingConfig(ratio = 0.3))
     assert(s.totalCount === 100 && s.sampledCount > 0 && s.sampledCount < 100)
-  }
-
-  test("K2 report sink: stdout format + JSON persistence") {
-    val docs = Tables.documents(spark, sf001)
-    val s = Sampled(docs, SamplingConfig(ratio = 0.5))
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_report_test.json"
-    ReportSink.emit(s.report(), path)
-    val json = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)))
-    assert(json.contains("\"designedRate\":0.5"))
-    assert(json.contains("\"total\":" + s.totalCount))
   }
 }

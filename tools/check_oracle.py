@@ -2,6 +2,7 @@
 """Local mirror of the driver's correctness gate: for each query parquet
 dumped by graft.Verify, run the oracle SQL in DuckDB over the same testdata
 tables and compare (columns sorted by name, rows sorted, values hashed).
+Every query listed in Verify's verify_errors.json counts as a failure.
 
 Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir>
 """
@@ -49,5 +50,12 @@ for name in sorted(os.listdir(out_dir)):
             print("  spark cols:", list(got.columns), "duck cols:", list(exp.columns))
     else:
         print(f"{name:28s} OK ({len(gs)} rows)")
+# a query Verify failed to build or write leaves no output dir to visit;
+# Verify records it in verify_errors.json instead
+err_path = f"{out_dir}/verify_errors.json"
+if os.path.exists(err_path):
+    for name, msg in sorted(json.load(open(err_path)).items()):
+        fails += 1
+        print(f"{name:28s} FAILED in Verify: {msg}")
 print("FAIL" if fails else "ALL OK")
 sys.exit(1 if fails else 0)
