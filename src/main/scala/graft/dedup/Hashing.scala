@@ -9,7 +9,9 @@ import org.apache.spark.sql.functions._
   * Everything here must be replicable in ANSI-ish SQL so the DuckDB oracle
   * can recompute it: hashes are md5-prefix based (both engines agree on md5
   * of UTF-8 text), not Spark-internal murmur/xxhash (engine-specific).
-  * All expressions are codegen'd built-ins — no UDFs in any hot path.
+  * Every expression is codegen'd — built-ins or the engine's native
+  * kernels ([[graft.functions.Hash60]], [[graft.functions.WordShingles]]);
+  * no UDFs in any hot path.
   */
 object Hashing {
 
@@ -17,9 +19,10 @@ object Hashing {
     * md5, read as a base-16 number. DuckDB equivalent:
     * `CAST('0x' || substr(md5(s), 1, 15) AS BIGINT)`.
     * 60 bits keeps it positive in a signed 64-bit long in both engines.
+    * Computed by the [[graft.functions.Hash60]] kernel straight off the
+    * digest bytes; [[graft.functions.Hash60.of]] is its driver-side scalar.
     */
-  def hash60(c: Column): Column =
-    conv(substring(md5(c), 1, 15), 16, 10).cast("long")
+  def hash60(c: Column): Column = graft.functions.Hash60.hash60(c)
 
   /** SQL text of [[hash60]] for DuckDB oracle generation. */
   def hash60Sql(expr: String): String =

@@ -40,13 +40,32 @@ case class RegexGroups(first: Expression, second: Expression, third: Expression)
     (first.dataType, second.dataType, third.dataType) match {
       case (StringType, StringType, StringType)
           if second.foldable && third.foldable =>
-        TypeCheckResult.TypeCheckSuccess
+        checkGroups()
       case _ =>
         TypeCheckResult.TypeCheckFailure(
           s"$prettyName requires (string, foldable string regex, foldable " +
             s"string group list), got " +
             Seq(first, second, third).map(_.dataType.sql).mkString(", "))
     }
+
+  /** A bad regex or group list fails here, at analysis, not per row: each
+    * listed group must be an int in `0..groupCount` of the pattern.
+    */
+  private def checkGroups(): TypeCheckResult = {
+    val regex = Option(second.eval(null)).map(_.toString)
+    val list = Option(third.eval(null)).map(_.toString)
+    val groupCount = regex.flatMap(r =>
+      scala.util.Try(java.util.regex.Pattern.compile(r).matcher("").groupCount).toOption)
+    val bad = list.toSeq.flatMap(_.split(",", -1)).filterNot(g =>
+      g.trim.toIntOption.exists(i => i >= 0 && groupCount.exists(i <= _)))
+    if (groupCount.isEmpty)
+      TypeCheckResult.TypeCheckFailure(s"$prettyName: invalid regex ${regex.orNull}")
+    else if (list.isEmpty || bad.nonEmpty)
+      TypeCheckResult.TypeCheckFailure(
+        s"$prettyName: group list ${list.orNull} must be comma-separated ints in " +
+          s"0..${groupCount.get}; bad: ${bad.mkString(", ")}")
+    else TypeCheckResult.TypeCheckSuccess
+  }
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
 

@@ -73,5 +73,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     extensions.injectFunction(graft.functions.SignBandKeys.descriptor)
     extensions.injectFunction(graft.functions.GramHashes.descriptor)
     extensions.injectFunction(graft.functions.RegexGroups.descriptor)
+    extensions.injectFunction(graft.functions.Hash60.descriptor)
   }
 }

@@ -61,13 +61,8 @@ object SampledFiles {
     * (name, seed) < ratio. Name-based (not full path) so the decision
     * survives directory moves/replication.
     */
-  private[sampling] def keep(fileName: String, seed: Long, ratio: Double): Boolean = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hex = md.digest(s"$fileName#$seed".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(15)
-    val h = java.lang.Long.parseLong(hex, 16)
-    h.toDouble / (1L << 60).toDouble < ratio
-  }
+  private[sampling] def keep(fileName: String, seed: Long, ratio: Double): Boolean =
+    graft.functions.Hash60.of(s"$fileName#$seed").toDouble / (1L << 60).toDouble < ratio
 
   /** Sample the parquet part-file list of `dir`. */
   def apply(spark: SparkSession, dir: String, config: SamplingConfig): SampledFiles =

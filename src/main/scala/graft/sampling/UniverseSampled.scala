@@ -28,7 +28,8 @@ import graft.dedup.Hashing
   *     samples by content hash and Quickr samples join inputs by key.
   *
   * Scale shape: identical to the Bernoulli path — the predicate is a
-  * codegen'd scan-stage filter (md5 of a short key string per row), so
+  * codegen'd scan-stage filter (md5 of a short key string per row, read
+  * straight off the digest bytes by [[graft.functions.Hash60]]), so
   * 1−p of a 100 TB corpus never leaves the scan loop, and Catalyst prunes
   * columns below it. Horvitz–Thompson scale-up is the same ×(1/p); the
   * trade-off vs `rand(seed)` is paying one md5 per row for determinism.
@@ -38,15 +39,16 @@ import graft.dedup.Hashing
   * seeds, token-budget ordering, DedupRate's content ranges).
   *
   * ==Which sampler should I use?==
-  * Decision rule (measured, BASELINE.md r9 ledger): when per-row
-  * DOWNSTREAM work dominates — tokenize/explode/regex/join after the
-  * sample — the universe (`_u10`) family wins AND is oracle-proven
-  * (wordcount 0.67 vs 0.77 s exact, text_quality 0.35 vs 0.97,
-  * text_tokens 0.23 vs 0.72 at sf0.1). When the query is SCAN-BOUND with
-  * a single pushed-down aggregate (TPC-H Q6 shape), the md5 keep-predicate
-  * cannot skip I/O and adds one hash per row, so it costs more than it
-  * saves (q6 `_u10` 0.76 s vs 0.23 s exact): use the seeded Bernoulli
-  * [[Sampled]] `_r10` twin there (0.21 s) — its `rand(seed)` filter is
+  * Decision rule (measured with `graft.tools.TimeQuery` at sf0.1 on a
+  * 4-core host, median of 3 warm trials): when per-row DOWNSTREAM work
+  * dominates — tokenize/explode/regex/join after the sample — the
+  * universe (`_u10`) family wins AND is oracle-proven (wordcount 0.44 vs
+  * 0.54 s exact, text_quality 0.50 vs 0.66, text_tokens 0.28 vs 0.48,
+  * monthly revenue join 0.62 vs 0.85). When the query is SCAN-BOUND with
+  * a single pushed-down aggregate (TPC-H Q6 shape), the keep predicate
+  * cannot skip I/O and adds one md5 per row, so it still costs more than
+  * it saves (q6 `_u10` 0.55 s vs 0.33 s exact): use the seeded Bernoulli
+  * [[Sampled]] `_r10` twin there (0.19 s) — its `rand(seed)` filter is
   * nearly free per row. Universe sampling's extra properties (exact
   * replayability, unit atomicity, retry/re-split determinism) are what
   * you pay that hash for; pick by whether the shape amortizes it.

@@ -65,16 +65,13 @@ object InvertedIndex {
         sort_array(collect_list(col("pos"))).as("positions"))
       .withColumn("b", pmod(Hashing.hash60(col("term")), lit(NumBuckets.toLong)).cast("int"))
 
-  /** Driver-side twin of the bucket derivation for query planning —
-    * lockstep with [[Hashing.hash60]] `% NumBuckets` (spec-pinned over the
-    * whole live vocabulary).
+  /** Driver-side bucket derivation for query planning: [[Hashing.hash60]]
+    * `% NumBuckets` through the kernel's own scalar
+    * ([[graft.functions.Hash60.of]]), so the two sides cannot drift
+    * (spec-pinned over the whole live vocabulary).
     */
-  def bucketOf(term: String): Int = {
-    val hex = java.security.MessageDigest.getInstance("MD5")
-      .digest(term.getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    (java.lang.Long.parseLong(hex.take(15), 16) % NumBuckets).toInt
-  }
+  def bucketOf(term: String): Int =
+    (graft.functions.Hash60.of(term) % NumBuckets).toInt
 
   /** Path of the published index for the corpus at `dir`, building it on
     * first use: bucket-partitioned, `(term, doc_id)`-sorted parquet keyed

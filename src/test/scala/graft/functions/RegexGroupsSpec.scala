@@ -50,4 +50,23 @@ class RegexGroupsSpec extends SparkSpec {
       regexp_extract(col("s"), "key=([0-9]+)", 1).as("e")).head()
     assert(out.getSeq[String](0) === Seq(out.getString(1)))
   }
+
+  test("a bad group list or regex fails at analysis, not per row") {
+    val df = Seq("ab").toDF("s")
+    // out of range (the pattern has one group), negative, not an int, empty
+    Seq(Seq(2), Seq(-1)).foreach { gs =>
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        df.select(RegexGroups.regexGroups(col("s"), "a(b)", gs)))
+      assert(e.getMessage.contains("regex_groups"))
+    }
+    Seq("1,x", "", "1,,0").foreach { gs =>
+      intercept[org.apache.spark.sql.AnalysisException](
+        df.selectExpr(s"regex_groups(s, 'a(b)', '$gs')"))
+    }
+    intercept[org.apache.spark.sql.AnalysisException](
+      df.selectExpr("regex_groups(s, 'a(b', '0')"))
+    // group 0 (the whole match) through groupCount are legal
+    assert(df.select(RegexGroups.regexGroups(col("s"), "a(b)", Seq(0, 1)))
+      .head().getSeq[String](0) === Seq("ab", "b"))
+  }
 }

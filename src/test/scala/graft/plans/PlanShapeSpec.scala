@@ -98,7 +98,7 @@ class PlanShapeSpec extends SparkSpec {
     // line)
     val lines = plan.linesIterator.toSeq
     val firstExchange = lines.indexWhere(_.contains("Exchange"))
-    val scanFilter = lines.lastIndexWhere(l => l.contains("Filter") && l.contains("md5"))
+    val scanFilter = lines.lastIndexWhere(l => l.contains("Filter") && l.contains("graft_hash60"))
     assert(firstExchange >= 0 && scanFilter > firstExchange, plan.take(3000))
     assert(plan.contains("ReadSchema: struct<doc_id:bigint,text:string>"), plan.take(3000))
   }

@@ -61,7 +61,7 @@ class SourcesSinksSpec extends SparkSpec {
     // Filter carrying the hash-range keep predicate — i.e. rejected spans
     // are never parsed, the reference's skip-before-parse semantics
     assert(parseAt < filterAt, plan.take(2000))
-    assert(plan.substring(filterAt).contains("md5"), plan.take(2000))
+    assert(plan.substring(filterAt).contains("graft_hash60"), plan.take(2000))
   }
 
   test("text source yields one line per document") {
